@@ -60,7 +60,13 @@ def run_qc_pipeline(
             order_extra=["iot_id"] if "iot_id" in df.columns else [],
         )
     else:
-        df = df.withColumn(
+        # ONE user repartition on the stream key feeds both windows (the
+        # bucketed twin's partition count): AQE coalesced the windows'
+        # own exchange by bytes into a single task, though a window's
+        # cost grows with rows × frame rows; it never coalesces a user
+        # repartition
+        n_parts = spark.sparkContext.defaultParallelism
+        df = df.repartition(n_parts, stream_key).withColumn(
             "gradient",
             gradient_column(
                 "result", "phenomenon_time", [stream_key],

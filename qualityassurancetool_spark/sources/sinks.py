@@ -11,11 +11,16 @@ their partition's batches; nothing funnels through the driver).
 
 from __future__ import annotations
 
+import datetime as dt
+import functools
 import json
+import operator
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+from qualityassurancetool_spark.functions import fs
 
 
 def build_patch_bodies(
@@ -112,6 +117,27 @@ def write_flags_table(
     writer.parquet(path)
 
 
+_DAY_DIR = "flag_date="
+# the directory Spark writes NULL partition values under
+_NULL_DAY = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _parse_day(dirname: str) -> dt.date | None:
+    value = dirname[len(_DAY_DIR):]
+    return None if value == _NULL_DAY else dt.date.fromisoformat(value)
+
+
+def _day_dir(day: dt.date | None) -> str:
+    return _DAY_DIR + (_NULL_DAY if day is None else day.isoformat())
+
+
+def _day_match(days: list[dt.date | None]) -> Column:
+    """Null-safe ``flag_date`` membership (``isin`` never matches NULL)."""
+    return functools.reduce(
+        operator.or_, (F.col("flag_date").eqNullSafe(d) for d in days)
+    )
+
+
 def upsert_flags_table(
     df: DataFrame,
     path: str,
@@ -127,86 +153,132 @@ def upsert_flags_table(
     :func:`write_flags_table` would delete a day's earlier windows'
     rows on every run (review finding, round 8).
 
-    Mechanics: the batch's rows are merged with the surviving rows of
-    the touched day partitions (anti-join on ``id_col``), staged to a
-    ``_upsert_stage`` dir inside the table (underscore-prefixed =
-    invisible to readers) to break the read-from-overwritten-path
-    lineage, then dynamic-overwritten back.  Re-running the same window
-    converges (its rows replace the same ids).  The final partition
-    rewrite is the non-atomic step — parquet has no multi-partition
-    commit; a crash inside it needs the window re-run (the driver
-    loop's natural retry).  A transactional table format is the 100 TB
-    upgrade path for that boundary.
+    Protocol, all inside ``<path>/_upsert_stage`` (underscore-prefixed =
+    invisible to readers):
+
+    1. the batch projection ``(id, flag, flag_date)`` is written ONCE,
+       partitioned by day, to ``batch/`` — the upstream plan (the QC
+       chain) runs exactly once per call;
+    2. the touched days are the ``flag_date=`` subdirectories of
+       ``batch/`` (a listing, no Spark job);
+    3. the table's touched day directories are read by path, their rows
+       anti-joined on ``id_col`` against the batch, unioned with the
+       batch and written, partitioned by day, to ``merged/``;
+    4. the days of the rewrite set that ``merged/`` left empty are
+       recorded in ``emptied_days``, then each ``merged/`` day replaces
+       its table directory by delete + rename and each emptied day is
+       deleted.
+
+    Re-running the same window converges (its rows replace the same
+    ids).  Step 4 is the one non-atomic step — parquet has no
+    multi-partition commit, nor does Spark's dynamic overwrite.  An
+    upsert that finds ``emptied_days`` (written only after ``merged/``
+    committed) first finishes that interrupted swap, so a crash inside
+    it is recovered by the next call, e.g. the cron loop re-running the
+    window.  A transactional table format is the 100 TB upgrade
+    path for that boundary.
+
+    NULL ``ts_col`` rows land in the ``__HIVE_DEFAULT_PARTITION__`` day
+    and upsert row by row like dated rows.  The table must keep the
+    batch projection's column types (it is read with that schema).
 
     Date-move contract (review finding, round 8): the default fast
-    path anti-joins only the batch's own day partitions, assuming an
+    path rewrites only the batch's own day partitions, assuming an
     observation id maps to exactly one date — true for the reference,
     whose ``phenomenon_time`` is immutable per observation.  If a
     source CAN re-date an observation (a corrected timestamp crossing
     midnight), pass ``sweep_moved_ids=True``: one extra full-table id
     semi-join widens the rewrite set to any old partition still
     holding a batch id, so the stale row under the old date is
-    dropped.  The sweep's scan is table-sized, so it is opt-in.
-    Dynamic overwrite only rewrites partitions the staged frame WRITES
-    — a swept day whose every row belonged to batch ids stages zero
-    survivors, so its partition would never be touched and the stale
-    rows would survive (advisor finding, round 9); such now-empty day
-    partitions are deleted explicitly after the write."""
-    from qualityassurancetool_spark.functions.fs import (
-        delete_path,
-        path_exists,
-    )
-
+    dropped; a swept day left with no rows is deleted in step 4.  The
+    sweep's scan is table-sized, so it is opt-in."""
     spark = df.sparkSession
     out = df.select(
         F.col(id_col),
         F.col(flag_col),
         F.to_date(F.col(ts_col)).alias("flag_date"),
     )
-    stage = None
-    if path_exists(spark, path):
-        days = [r[0] for r in out.select("flag_date").distinct().collect()]
-        if not days:
-            return
+    if not fs.path_exists(spark, path):
+        (
+            out.write.mode("overwrite")
+            .partitionBy("flag_date")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(path)
+        )
+        return
+    root = path.rstrip("/")
+    stage = f"{root}/_upsert_stage"
+    _finish_swap(spark, root, stage)
+    out.write.mode("overwrite").partitionBy("flag_date").parquet(
+        f"{stage}/batch"
+    )
+    days = [
+        _parse_day(d) for d in fs.list_subdirs(spark, f"{stage}/batch", _DAY_DIR)
+    ]
+    if days:
+        batch = spark.read.schema(out.schema).parquet(f"{stage}/batch")
         if sweep_moved_ids:
-            moved_days = [
+            days += [
                 r[0]
-                for r in spark.read.parquet(path)
+                for r in spark.read.schema(out.schema)
+                .parquet(root)
                 .join(
-                    F.broadcast(out.select(id_col).distinct()),
+                    F.broadcast(batch.select(id_col).distinct()),
                     id_col,
                     "left_semi",
                 )
-                .where(~F.col("flag_date").isin(days))
+                .where(~_day_match(days))
                 .select("flag_date")
                 .distinct()
                 .collect()
             ]
-            days = days + moved_days
-        existing = spark.read.parquet(path).where(
-            F.col("flag_date").isin(days)
+        # read by path: lists only the touched days (not the whole
+        # table), and the NULL day matches by its directory name
+        present = [
+            f"{root}/{d}"
+            for d in map(_day_dir, days)
+            if fs.path_exists(spark, f"{root}/{d}")
+        ]
+        merged = batch
+        if present:
+            keep = (
+                spark.read.schema(out.schema)
+                .option("basePath", root)
+                .parquet(*present)
+                .join(batch.select(id_col), id_col, "left_anti")
+            )
+            merged = keep.unionByName(batch)
+        # one shuffle by day keeps the file count per day bounded (AQE
+        # coalesces small days into one task, splits big ones)
+        (
+            merged.hint("rebalance", "flag_date")
+            .write.mode("overwrite")
+            .partitionBy("flag_date")
+            .parquet(f"{stage}/merged")
         )
-        keep = existing.join(out.select(id_col), id_col, "left_anti")
-        stage = path.rstrip("/") + "/_upsert_stage"
-        keep.unionByName(out).write.mode("overwrite").parquet(stage)
-        out = spark.read.parquet(stage)
-    (
-        out.write.mode("overwrite")
-        .partitionBy("flag_date")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-    if stage is not None:
-        # days the rewrite set covered but the staged frame left empty
-        # (every row was a batch id that moved away) — dynamic overwrite
-        # never touched them, so drop the stale partitions directly
-        staged_days = {
-            r[0] for r in out.select("flag_date").distinct().collect()
-        }
-        for day in days:
-            if day not in staged_days:
-                delete_path(spark, f"{path.rstrip('/')}/flag_date={day}")
-        delete_path(spark, stage)
+        staged = set(fs.list_subdirs(spark, f"{stage}/merged", _DAY_DIR))
+        fs.write_text(
+            spark,
+            f"{stage}/emptied_days",
+            "\n".join(d for d in map(_day_dir, days) if d not in staged),
+        )
+    _finish_swap(spark, root, stage)
+
+
+def _finish_swap(spark: SparkSession, root: str, stage: str) -> None:
+    """Step 4 of :func:`upsert_flags_table` when the stage recorded its
+    emptied days (so ``merged/`` is complete), then drop the stage.
+    Idempotent: moved days are no longer under ``merged/``, and deleting
+    an emptied day twice is harmless."""
+    marker = f"{stage}/emptied_days"
+    if fs.path_exists(spark, marker):
+        merged = f"{stage}/merged"
+        for day in fs.list_subdirs(spark, merged, _DAY_DIR):
+            fs.delete_path(spark, f"{root}/{day}")
+            fs.rename_overwrite(spark, f"{merged}/{day}", f"{root}/{day}")
+        for day in fs.read_text(spark, marker).split():
+            fs.delete_path(spark, f"{root}/{day}")
+    fs.delete_path(spark, stage)
 
 
 def make_http_batch_sender(
@@ -265,25 +337,31 @@ def http_patch_sink(
 
     ``sender`` receives one list of Rows per batch; the default dry-run
     sender counts bodies without any I/O (reference dry-run switch).
-    Returns the number of patch bodies produced.
+    Returns the number of patch bodies produced.  A sending call runs
+    the upstream plan once: the count rides the ``foreachPartition``
+    action as an accumulator, which Spark applies once per task even
+    when a task is retried.
     """
     bodies = build_patch_bodies(df)
-    n = bodies.count()
     if dry_run and sender is None:
-        return n
+        return bodies.count()
+    sent = df.sparkSession.sparkContext.accumulator(0)
 
     def handle(partition: Iterator[Row]) -> None:
         batch: list[Row] = []
+        n = 0
         for row in partition:
             batch.append(row)
+            n += 1
             if len(batch) >= batch_size:
                 sender(batch)  # type: ignore[misc]
                 batch = []
         if batch:
             sender(batch)  # type: ignore[misc]
+        sent.add(n)
 
     bodies.foreachPartition(handle)
-    return n
+    return sent.value
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:

@@ -52,6 +52,17 @@ def _plan(df) -> str:
     return s.split("== Initial Plan ==")[0]
 
 
+def _final_plan(spark, df) -> str:
+    """The final adaptive plan of an already-executed ``df`` (stage
+    reuse only shows up at runtime)."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "simple"
+    )
+    s = df._jdf.queryExecution().explainString(mode)
+    assert "isFinalPlan=true" in s, s
+    return s.split("== Initial Plan ==")[0]
+
+
 def test_no_cartesian_products_anywhere(spark, entrymod, sf_dir):
     offenders = []
     for name, fn in entrymod.queries().items():
@@ -191,6 +202,8 @@ def test_round5_promoted_query_plan_shapes(spark, entrymod, sf_dir):
     (the exchange carries cell counts, never the token stream); bm25's
     corpus explode is semi-joined to matched query terms before any
     aggregation."""
+    import re
+
     qs = entrymod.queries()
     mp = _plan(qs["multipattern"](spark, sf_dir))
     assert "Exchange" not in mp, mp
@@ -200,15 +213,25 @@ def test_round5_promoted_query_plan_shapes(spark, entrymod, sf_dir):
     # partial_ rows before the exchange = map-side combine of the cells
     assert "partial_count" in cms or "partial_sum" in cms, cms
 
-    bm = _plan(qs["bm25"](spark, sf_dir))
-    # round-6: ONE corpus text scan — the corpus tokenizes into a
-    # query-independent persisted slim frame; the stats agg and the
-    # scoring explode both read the cache, so every consumer of the
-    # corpus is an InMemoryTableScan and the only live FileScan of the
-    # text column is the (pushed-down) query set.  The vocab match
-    # stays a broadcast hash semi-join (O(1) per token; a vocab-array
-    # literal filter measured ~40% slower at 1.2k terms).
-    assert bm.count("InMemoryTableScan") >= 2, bm
+    bm_df = qs["bm25"](spark, sf_dir)
+    bm_df.collect()
+    bm = _final_plan(spark, bm_df)
+    # round-12: no persisted token frame (a persist blocked AQE stage
+    # reuse) — the tf aggregate's doc-keyed exchange runs ONCE and the
+    # document-frequency side reads it back as a ReusedExchange (same
+    # shape as tests/test_bm25.py::test_tf_exchange_reused_at_runtime,
+    # asserted on the final adaptive plan).  The vocab match stays a
+    # broadcast hash semi-join (O(1) per token; a vocab-array literal
+    # filter measured ~40% slower at 1.2k terms).
+    assert bm.count("InMemoryTableScan") == 0, bm
+    live_tf = re.findall(r"\+- Exchange hashpartitioning\(doc_id", bm)
+    reused_tf = [
+        ln
+        for ln in bm.splitlines()
+        if "ReusedExchange" in ln
+        and re.search(r"hashpartitioning\(doc_id", ln)
+    ]
+    assert len(live_tf) == 1 and len(reused_tf) == 1, bm
     assert "LeftSemi" in bm, bm
     # no Python anywhere in the scoring path
     assert "EvalPython" not in bm and "InPandas" not in bm, bm
@@ -230,6 +253,13 @@ def test_qc_chain_windows_run_on_slim_frame(spark, entrymod, sf_dir):
     assert join_at < first_window, plan
     assert plan.count("Window [") == 2, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
+    # ... and that exchange is the user repartition, which AQE never
+    # coalesces: a byte-coalesced stream shuffle ran the whole z-score
+    # window of a cron window as ONE task
+    stream_exchange = next(
+        ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
+    )
+    assert "REPARTITION_BY_NUM" in stream_exchange, plan
 
 
 def test_shrinking_frame_rule_fires_and_resample_is_clean(spark, sf_dir):

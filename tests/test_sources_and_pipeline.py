@@ -113,6 +113,39 @@ def test_patch_bodies_and_flags_table(spark, tmp_path):
     assert "flag_date" in back.columns
 
 
+def test_http_patch_sink_sends_in_one_job(spark, tmp_path):
+    """A sending call runs the upstream plan once: the returned count
+    comes from an accumulator inside the ``foreachPartition`` action
+    (no separate ``count()`` job) and equals the rows the sender got."""
+    import uuid
+
+    out = str(tmp_path / "sent")
+    os.makedirs(out)
+
+    def sender(batch):
+        # executor-side: each batch lands in its own file
+        with open(os.path.join(out, uuid.uuid4().hex), "w") as fh:
+            fh.write("\n".join(str(r["entity_id"]) for r in batch))
+
+    df = spark.range(0, 10, 1, 3).select(
+        F.col("id").alias("iot_id"), F.lit(1).alias("qc_flag")
+    )
+    sc = spark.sparkContext
+    group = f"patch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "http_patch_sink")
+    try:
+        n = http_patch_sink(df, sender=sender, dry_run=False, batch_size=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    received = []
+    for name in os.listdir(out):
+        with open(os.path.join(out, name)) as fh:
+            received += [int(x) for x in fh.read().split()]
+    assert n == len(received) == 10
+    assert sorted(received) == list(range(10))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_rounding_and_best_record(spark):
     t0 = dt.datetime(2023, 1, 1)
     rows = [
@@ -315,6 +348,79 @@ def test_upsert_sweep_deletes_emptied_day_partition(spark, tmp_path):
     # idempotent: the re-run sweeps an already-deleted day harmlessly
     upsert_flags_table(moved, path, sweep_moved_ids=True)
     assert spark.read.parquet(path).count() == 2
+
+
+def test_upsert_null_timestamp_rows_upsert_row_by_row(spark, tmp_path):
+    """Rows without a timestamp land in the NULL day partition
+    (``flag_date=__HIVE_DEFAULT_PARTITION__``) and upsert row by row
+    like dated rows: a later batch neither drops earlier NULL-date rows
+    nor keeps a stale flag for a re-flagged one."""
+    from qualityassurancetool_spark.sources.sinks import upsert_flags_table
+
+    schema = "iot_id long, qc_flag tinyint, phenomenon_time timestamp"
+    day = dt.datetime(2023, 1, 1, 12)
+    path = str(tmp_path / "flags")
+    for batch in (
+        [(1, 1, day), (2, 1, None)],
+        [(3, 1, day), (4, 1, None)],
+        [(2, 4, None), (6, 3, None)],
+    ):
+        upsert_flags_table(spark.createDataFrame(batch, schema), path)
+
+    rows = spark.read.parquet(path).collect()
+    got = {r["iot_id"]: (r["qc_flag"], r["flag_date"]) for r in rows}
+    assert got == {
+        1: (1, day.date()), 3: (1, day.date()),
+        2: (4, None), 4: (1, None), 6: (3, None),
+    }
+
+
+def test_upsert_rerun_finishes_interrupted_swap(spark, tmp_path, monkeypatch):
+    """The per-day delete + rename swap is the one non-atomic step.  A
+    swap that dies after its first day leaves the second day deleted;
+    re-running the same batch must first finish the recorded swap, and
+    end equal to a clean run."""
+    from qualityassurancetool_spark.functions import fs
+    from qualityassurancetool_spark.sources.sinks import upsert_flags_table
+
+    schema = "iot_id long, qc_flag tinyint, phenomenon_time timestamp"
+    d1, d2 = dt.datetime(2023, 1, 1, 12), dt.datetime(2023, 1, 2, 12)
+    first = spark.createDataFrame(
+        [(1, 1, d1), (2, 1, d1), (3, 1, d2), (4, 1, d2)], schema
+    )
+    batch = spark.createDataFrame([(1, 4, d1), (3, 4, d2), (5, 3, d2)], schema)
+
+    def table(path):
+        return sorted(
+            (r["iot_id"], r["qc_flag"], str(r["flag_date"]))
+            for r in spark.read.parquet(path).collect()
+        )
+
+    clean = str(tmp_path / "clean")
+    upsert_flags_table(first, clean)
+    upsert_flags_table(batch, clean)
+
+    path = str(tmp_path / "flags")
+    upsert_flags_table(first, path)
+    real_rename = fs.rename_overwrite
+    renamed = []
+
+    def rename_once(spark_, src, dst):
+        if renamed:
+            raise OSError("injected crash inside the swap")
+        renamed.append(dst)
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fs, "rename_overwrite", rename_once)
+    with pytest.raises(OSError, match="injected"):
+        upsert_flags_table(batch, path)
+    monkeypatch.setattr(fs, "rename_overwrite", real_rename)
+    # the crash lost one day partition
+    assert len(table(path)) < len(table(clean))
+
+    upsert_flags_table(batch, path)
+    assert table(path) == table(clean)
+    assert not os.path.exists(os.path.join(path, "_upsert_stage"))
 
 
 def test_sensorthings_datasource_pages_as_partitions(spark, tmp_path):
