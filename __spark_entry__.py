@@ -2009,33 +2009,18 @@ ORDER BY k
 """
 
 
-# verified near-dup pairs are the shared upstream of TWO declared queries
-# (dedup_minhash_lsh reports them, dedup_clusters runs components over
-# them) — computed once per (session, sf_dir) and persisted so the
-# clusters query never re-shingles the corpus (VERDICT r6 item 5).  One
-# bounded entry per app: switching sessions or sf_dirs evicts the old
-# frame (unpersist) instead of accumulating cache entries.
-_MINHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-dup pairs, the shared upstream of dedup_minhash_lsh
+    (reports them) and dedup_clusters (runs components over them).
+    Built lazily on every call, so each query reads the files currently
+    under ``sf_dir``."""
     from qualityassurancetool_spark.operators.dedup import minhash_dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MINHASH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for old_key, old_df in list(_MINHASH_PAIRS_CACHE.items()):
-        if old_key[0] == key[0]:
-            old_df.unpersist()
-        del _MINHASH_PAIRS_CACHE[old_key]
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_dedup(
+    return minhash_dedup(
         docs, num_hashes=16, bands=8, shingle_k=3, threshold=0.5,
         hash_mode="portable",
-    ).persist()
-    _MINHASH_PAIRS_CACHE[key] = pairs
-    return pairs
+    )
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3463,7 +3448,9 @@ _IVFADC_SMOD, _IVFADC_SOFF = 31, 5  # codebook sample: % 31 == 5
 # deployment actually serves, with the probed IN literal resolving to
 # file-level PartitionFilters pruning.  Written once per (session,
 # sf_dir); the read-back is deterministic, so the DuckDB oracle is
-# unchanged.  One bounded entry, like _MINHASH_PAIRS_CACHE.
+# unchanged.  One bounded entry.  This memo stays because it owns the
+# layout files on disk: frames returned by earlier calls read them
+# lazily, so rewriting the layout per call would pull them away.
 _IVFADC_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -8,11 +8,8 @@ action is now the NOOP SINK (``df.write.format("noop")``), which computes
 every column of every row, instead of ``count()``, which let the optimizer
 prune columns and whole subtrees (proven concretely by resample in round
 11: its windows+join never executed under count()).  The headline
-``value``/``queries`` are noop-sink medians; the OLD count()-action
-numbers are still measured and recorded under ``count_action`` for one
-round so cross-round comparisons stay apples-to-apples (r11 and earlier
-headline numbers are count-action).  Disable the compat pass with
-``SPARK_GRAFT_BENCH_COUNT=0``.
+``value``/``queries`` are noop-sink medians (r11 and earlier headline
+numbers are count-action and do not compare directly).
 
 Stability: each query runs ``$SPARK_GRAFT_BENCH_ITERS`` times (default 3,
 back-to-back so iterations 2+ are warm) and reports the per-query MEDIAN;
@@ -137,21 +134,15 @@ def main() -> None:
     # driver vs 0.57 s local median with an unchanged plan).  Table
     # counts alone don't warm the codegen paths each query exercises;
     # executing every query once does, so slot order stops mattering.
-    # The warm-up pass doubles as the COLD-cost record: several queries
-    # amortize a one-time build into their first run (bm25's persisted
-    # token frame, the shared minhash verified-pairs frame behind
-    # dedup_minhash_lsh + dedup_clusters, the ann_ivfadc disk layout) —
-    # their warm medians below would otherwise read as the full cost of
-    # a single cold invocation.  cold_s also carries session-wide JIT/
-    # codegen warm-up (that's what this pass exists to absorb), so it is
-    # an upper bound on the one-time build, not a pure build time.
-    def run_noop(df) -> int:
+    # The warm-up pass doubles as the COLD-cost record: ann_ivfadc
+    # writes its disk layout on its first run, so its warm median alone
+    # would understate a single cold invocation.  cold_s also carries
+    # session-wide JIT/codegen warm-up (that's what this pass exists to
+    # absorb), so it is an upper bound on any one-time build, not a pure
+    # build time.
+    def run_noop(df) -> None:
         # guide §1.4: computes EVERY column of EVERY row, prunes nothing
         df.write.format("noop").mode("overwrite").save()
-        return -1
-
-    def run_count(df) -> int:
-        return df.count()
 
     t_warm = time.perf_counter()
     cold: dict[str, float] = {}
@@ -165,23 +156,19 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    def timed_pass(
-        directory: str, iters: int, action
-    ) -> tuple[float, dict, dict]:
+    def timed_pass(directory: str, iters: int) -> tuple[float, dict, dict]:
         tm: dict[str, float] = {}
         bm: dict[str, float] = {}
         tot = 0.0
-        tag = action.__name__.removeprefix("run_")
         for name in BENCH_QUERIES:
             fn = qs[name]
             samples = []
             builds = []
-            n = 0
             for _ in range(iters):
                 t0 = time.perf_counter()
                 df = fn(spark, directory)
                 builds.append(time.perf_counter() - t0)
-                n = action(df)
+                run_noop(df)
                 samples.append(time.perf_counter() - t0)
             dt = statistics.median(samples)
             tm[name] = round(dt, 3)
@@ -192,24 +179,15 @@ def main() -> None:
             bm[name] = round(statistics.median(builds), 3)
             tot += dt
             print(
-                f"# {name} [{tag}]: median {dt:.3f}s over {iters} "
+                f"# {name}: median {dt:.3f}s over {iters} "
                 f"(min {min(samples):.3f} max {max(samples):.3f}) "
-                f"build {bm[name]:.3f}s rows={n}",
+                f"build {bm[name]:.3f}s",
                 file=sys.stderr,
             )
         return tot, tm, bm
 
     iters = max(int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")), 1)
-    with_count = os.environ.get("SPARK_GRAFT_BENCH_COUNT", "1") != "0"
-    total, timings, builds = timed_pass(sf_dir, iters, run_noop)
-    count_block = None
-    if with_count:
-        total_c, timings_c, _ = timed_pass(sf_dir, iters, run_count)
-        count_block = {
-            "value": round(total_c, 3),
-            "queries": timings_c,
-            "iters": iters,
-        }
+    total, timings, builds = timed_pass(sf_dir, iters)
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     payload = {
@@ -228,10 +206,6 @@ def main() -> None:
         "sf": float(sf) if sf else None,
         "iters": iters,
     }
-    if count_block is not None:
-        # the pre-round-12 methodology (count() action), kept for one
-        # round so r11-vs-r12 comparisons stay apples-to-apples
-        payload["count_action"] = count_block
 
     # sf1 calibration pass (VERDICT r5 #9): the plans only
     # differentiate under 10x data, so the gate artifact records both
@@ -276,7 +250,7 @@ def main() -> None:
                 int(os.environ.get("SPARK_GRAFT_BENCH_SF1_ITERS", "2")),
                 1,
             )
-            total1, timings1, builds1 = timed_pass(sf1_dir, iters1, run_noop)
+            total1, timings1, builds1 = timed_pass(sf1_dir, iters1)
             payload["sf1"] = {
                 "value": round(total1, 3),
                 "queries": timings1,
@@ -287,15 +261,6 @@ def main() -> None:
                 "iters": iters1,
                 "dir": sf1_dir,
             }
-            if with_count:
-                total1c, timings1c, _ = timed_pass(
-                    sf1_dir, iters1, run_count
-                )
-                payload["sf1"]["count_action"] = {
-                    "value": round(total1c, 3),
-                    "queries": timings1c,
-                    "iters": iters1,
-                }
         except Exception as e:  # sf1 is calibration, never a gate abort
             print(f"# sf1 pass skipped: {e!r}", file=sys.stderr)
 

@@ -20,6 +20,8 @@ from enum import IntEnum
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from qualityassurancetool_spark.functions.exprmemo import memoized_expr
+
 
 class QualityFlags(IntEnum):
     """L20 numeric codes (values) — severity is ``FLAG_SEVERITY``, not value."""
@@ -68,25 +70,19 @@ _CODE_TO_RANK_ARR = [FLAG_SEVERITY[c] for c in sorted(FLAG_SEVERITY)]
 _RANK_TO_CODE_ARR = [_RANK_TO_CODE[r] for r in sorted(_RANK_TO_CODE)]
 
 
-# The two lookup-array Column objects are memoized: a Column wraps an
-# immutable JVM expression, reusable across every plan in the JVM, and
-# rebuilding one costs ~25 py4j round-trips — flag algebra is embedded in
-# every QC query (the reference-chain build alone made 8k py4j calls,
-# ~2.2 s of driver time, a third of it here).
-_LOOKUP_CACHE: dict[str, Column] = {}
-
-
+# The two lookup-array Column objects are memoized (exprmemo): a Column
+# wraps an immutable JVM expression, reusable across every plan in the
+# JVM, and rebuilding one costs ~25 py4j round-trips — flag algebra is
+# embedded in every QC query and every window of a cron loop.
 def _lookup(key: str) -> Column:
-    col = _LOOKUP_CACHE.get(key)
-    if col is None:
+    def _build() -> Column:
         if key == "code_to_rank":
-            col = F.array(*[F.lit(r) for r in _CODE_TO_RANK_ARR])
-        else:
-            col = F.array(
-                *[F.lit(code).cast("tinyint") for code in _RANK_TO_CODE_ARR]
-            )
-        _LOOKUP_CACHE[key] = col
-    return col
+            return F.array(*[F.lit(r) for r in _CODE_TO_RANK_ARR])
+        return F.array(
+            *[F.lit(code).cast("tinyint") for code in _RANK_TO_CODE_ARR]
+        )
+
+    return memoized_expr(("flag_lookup", key), _build)
 
 
 def flag_rank(flag: Column | str) -> Column:

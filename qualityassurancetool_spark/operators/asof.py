@@ -117,7 +117,7 @@ def asof_nearest_join(
     # nearest pick as ONE min(struct) hash aggregation instead of a
     # row_number window: partial aggregation ships a single candidate per
     # (dep row, map task) and there is no sort — measured 1.4x faster at
-    # 10M rows (tools/scale_probe_sessions.py asof), identical output.
+    # 10M rows (docs/SCALE.md, "As-of join"), identical output.
     # Ordering fields replicate ORDER BY (|Δt|, ind_ts, ind_id) ASC NULLS
     # LAST: real candidates never have null ordering fields (the join
     # condition requires the ind side), and unmatched left-join rows

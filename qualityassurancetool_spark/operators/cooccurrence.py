@@ -25,7 +25,7 @@ cap changes what is safe to materialize):
  - UNCAPPED: the comprehension would materialize a user's whole
    pair array as ONE row before exploding — a 30 k-item bot basket
    is 450 M structs in a single task's heap, an executor OOM (not a
-   slowdown; metered in ``tools/scale_probe_events.py``).  So the
+   slowdown; metered in docs/SCALE.md, "Event-stream analytics").  So the
    uncapped path uses the streaming self-join on the user key
    instead: quadratic WORK remains the caller's explicit choice,
    but pairs stream through the partial aggregation, spill, and
@@ -71,7 +71,7 @@ def cooccurrence(
         # materialize a user's ENTIRE pair array as one row before
         # exploding — a 30k-item bot basket is 450M structs in a
         # single task's heap, an OOM, not a slowdown (metered:
-        # tools/scale_probe_events.py).  The self-join formulation
+        # docs/SCALE.md, "Event-stream analytics").  The self-join formulation
         # streams pairs through the partial aggregation instead:
         # quadratic WORK is still the caller's risk, but it spills
         # and finishes rather than killing the executor.

@@ -98,8 +98,8 @@ def kmv_sketch_by(
     its ≤ k smallest distinct hashes PER GROUP before anything
     shuffles, so the shuffle carries ≤ partitions × groups × k hash
     rows — metered flat vs the distinct-every-key route, which grows
-    linearly with corpus cardinality
-    (``tools/dress_rehearsal_sketches.py``)."""
+    linearly with corpus cardinality (docs/SCALE.md, "Round-5:
+    distinct-sketch family")."""
     _check_k(k)
     hashes = df.where(F.col(key_col).isNotNull()).select(
         *group_cols,

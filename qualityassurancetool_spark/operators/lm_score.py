@@ -45,8 +45,8 @@ def _explode_trigrams(df: DataFrame, text_col: str, keep: list[str]):
       ``substr(i, 3)`` on UTF-8 scans from the string start to find
       char ``i`` (variable-width encoding), making per-trigram substr
       O(doc_len²) per document — the char-array form is O(doc_len)
-      (measured 37.9 s → seconds for 100k docs,
-      ``tools/scale_probe_r3.py``)."""
+      (measured 37.9 s → seconds for 100k docs, docs/SCALE.md,
+      "Measured round-3 baseline")."""
     from qualityassurancetool_spark.functions.partitioning import (
         compute_behind_barrier,
     )

@@ -309,33 +309,33 @@ def nearest_centroids(
     )
 
 
-_CENTROID_CACHE: dict[tuple, tuple[list[int], list[list[float]]]] = {}
-
-
 def _collect_centroids(
     centroids: DataFrame, cent_id_col: str, cent_vec_col: str
 ) -> tuple[list[int], list[list[float]]]:
-    """Collect the (small) centroid dim once per distinct logical plan —
-    the two assignment sites inside one IVF query, and repeated query
-    builds in a session, share one collect job.
+    """Collect the (small) centroid dim to driver lists, ordered by id.
+    Exactly one Spark job per call (the dim is sorted on the driver: an
+    ``orderBy`` would add a range-sampling job and a shuffle stage), so
+    a refit written over the same path is read afresh by the next
+    build."""
+    rows = centroids.select(cent_id_col, cent_vec_col).collect()
+    rows.sort(key=lambda r: (r[0] is not None, r[0]))
+    return [r[0] for r in rows], [list(r[1]) for r in rows]
 
-    The cache key is (plan semanticHash, input file set): an identical
-    plan over an OVERWRITTEN centroid parquet path produces new part
-    files, so a refit lands under a new key instead of silently serving
-    the stale centroids for the process lifetime (review finding,
-    round 8).  Non-file-backed frames (literals, cached) list no input
-    files and key on the plan alone, as before."""
-    sel = centroids.select(cent_id_col, cent_vec_col).orderBy(cent_id_col)
-    key = (
-        sel._jdf.queryExecution().analyzed().semanticHash(),
-        tuple(sorted(centroids.inputFiles())),
+
+def _assign_to(
+    corpus: DataFrame,
+    ids: list[int],
+    vecs: list[list[float]],
+    n_nearest: int,
+    vec_col: str,
+) -> DataFrame:
+    near = nearest_centroids(F.col(vec_col), ids, vecs, n_nearest)
+    exploded = corpus.select(
+        "*", F.posexplode(near).alias("_pos", "cluster_id")
     )
-    if key not in _CENTROID_CACHE:
-        if len(_CENTROID_CACHE) > 16:
-            _CENTROID_CACHE.clear()
-        rows = sel.collect()
-        _CENTROID_CACHE[key] = ([r[0] for r in rows], [list(r[1]) for r in rows])
-    return _CENTROID_CACHE[key]
+    if n_nearest == 1:
+        return exploded.drop("_pos")
+    return exploded.withColumn("_cent_rank", F.col("_pos") + 1).drop("_pos")
 
 
 def ivf_assign(
@@ -362,13 +362,7 @@ def ivf_assign(
     Generate is a substitution barrier: the fold runs exactly once per
     row, after any repartition."""
     ids, vecs = _collect_centroids(centroids, cent_id_col, cent_vec_col)
-    near = nearest_centroids(F.col(vec_col), ids, vecs, n_nearest)
-    exploded = corpus.select(
-        "*", F.posexplode(near).alias("_pos", "cluster_id")
-    )
-    if n_nearest == 1:
-        return exploded.drop("_pos")
-    return exploded.withColumn("_cent_rank", F.col("_pos") + 1).drop("_pos")
+    return _assign_to(corpus, ids, vecs, n_nearest, vec_col)
 
 
 def ivf_topk(
@@ -394,19 +388,21 @@ def ivf_topk(
         ensure_min_parallelism,
     )
 
-    c_assigned = ivf_assign(
-        ensure_min_parallelism(corpus), centroids, 1, vec_col, id_col
+    # one centroid collect feeds both assignment sites
+    ids, vecs = _collect_centroids(centroids, "cent_id", "cent_vec")
+    c_assigned = _assign_to(
+        ensure_min_parallelism(corpus), ids, vecs, 1, vec_col
     ).withColumn("_cnorm", l2_norm(F.col(vec_col)))
-    q_assigned = ivf_assign(
+    q_assigned = _assign_to(
         queries.select(
             F.col(id_col).alias(query_id_col),
             F.col(vec_col).alias("_qvec"),
             l2_norm(F.col(vec_col)).alias("_qnorm"),
         ),
-        centroids,
+        ids,
+        vecs,
         nprobe,
         "_qvec",
-        query_id_col,
     ).select(query_id_col, "_qvec", "_qnorm", "cluster_id")
     joined = c_assigned.alias("c").join(
         F.broadcast(q_assigned).alias("q"),

@@ -421,62 +421,6 @@ def _check_dependent(
     return df
 
 
-def _freeze(v):
-    """Canonical by-VALUE form of a config fragment, for the chain plan
-    memo key.  Floats serialize via ``hex()`` (exact), dicts sort, and
-    dataclass instances recurse through their full ``__dict__`` —
-    INCLUDING attributes set after construction, so a mutated config
-    always re-digests.  Unknown objects fall back to ``repr``: an
-    id-bearing default repr can only cause a memo MISS for an
-    equal-valued new object (a rebuild — safe), never a stale hit."""
-    import dataclasses
-
-    if dataclasses.is_dataclass(v) and not isinstance(v, type):
-        return ("@dc", type(v).__name__, _freeze(vars(v)))
-    if isinstance(v, dict):
-        return (
-            "@d",
-            tuple(
-                sorted(
-                    ((_freeze(k), _freeze(x)) for k, x in v.items()),
-                    key=repr,
-                )
-            ),
-        )
-    if isinstance(v, (list, tuple)):
-        return ("@l", tuple(_freeze(x) for x in v))
-    if isinstance(v, float):
-        return ("@f", v.hex())
-    if isinstance(v, (str, int, bool, type(None))):
-        return v
-    return ("@r", repr(v))
-
-
-def _cfg_digest(cfg: QCConfig) -> tuple:
-    """Every config attribute by value, EXCEPT the derived region-mask
-    memo (``_region_mask_cache`` is itself keyed on a digest of the
-    polygon coordinates, which ARE covered here via ``region_polygons``
-    and ``region_mask_cell_deg`` — its presence changes no plan)."""
-    state = {
-        k: v
-        for k, v in vars(cfg).items()
-        if k != "_region_mask_cache"
-    }
-    return _freeze(state)
-
-
-# (key, input_df, output_df, SparkContext) per built chain: a PLAN memo
-# in the load_table discipline — DataFrames are immutable logical plans,
-# so returning the same object is semantically inert and every action
-# still executes the full computation.  The input frame is held and
-# compared by IDENTITY (the load_table/events_as_observations memos
-# return stable objects per (applicationId, sf_dir)), so a different
-# input plan can never be served another input's chain, and holding the
-# reference prevents id-reuse aliasing.
-_CHAIN_MEMO: list = []
-_CHAIN_MEMO_MAX = 32
-
-
 def run_registered_checks(
     df: DataFrame,
     cfg: QCConfig,
@@ -485,45 +429,16 @@ def run_registered_checks(
     stream_col: str = "observation_type",
 ) -> DataFrame:
     """Fold the named checks (default: every registered check, in
-    registration = reference order) over the observations plan.
-
-    The finished plan is memoized per (SparkContext, input frame
-    identity, full config digest, check list, stream column): chain
-    construction is ~0.5 s of driver-side Catalyst analysis + py4j
-    traffic per build (round-12 profile), pure overhead when the same
-    configured chain is issued repeatedly — the scenario every caller
-    in this repo (and a production scheduler re-running a window) hits.
-    The digest covers EVERY config attribute by value (see
-    ``_cfg_digest``), so any mutation — a threshold, a polygon vertex,
-    a drift knob, a dynamically-set attribute — rebuilds; parity is
-    pinned by ``tests/test_registry_memo.py``."""
+    registration = reference order) over the observations plan.  Each
+    call builds the chain afresh, so a rebuild sees the current input
+    frame, config and any live source (JDBC polygons) as they are now."""
     names = checks if checks is not None else list(CHECK_REGISTRY)
     for name in names:
         if name not in CHECK_REGISTRY:
             raise KeyError(
                 f"unknown check {name!r}; registered: {list(CHECK_REGISTRY)}"
             )
-    # two build paths have BUILD-TIME side effects and must never be
-    # served (or stored) from the plan memo: asof_materialize
-    # localCheckpoints data during construction (a memo hit would reuse
-    # materialized data), and a pending JDBC polygon source reads a
-    # live database whose rows may change between builds
-    memoizable = not getattr(cfg, "asof_materialize", False) and not (
-        getattr(cfg, "region_polygons_jdbc", None)
-        and getattr(cfg, "region_polygons", None) is None
-    )
-    sc = spark.sparkContext
-    key = None
-    if memoizable:
-        key = (tuple(names), stream_col, _cfg_digest(cfg))
-        for ent_key, ent_in, ent_out, ent_sc in _CHAIN_MEMO:
-            if ent_key == key and ent_in is df and ent_sc is sc:
-                return ent_out
     out = df
     for name in names:
         out = CHECK_REGISTRY[name](out, cfg, spark, stream_col)
-    if memoizable:
-        if len(_CHAIN_MEMO) >= _CHAIN_MEMO_MAX:
-            del _CHAIN_MEMO[: _CHAIN_MEMO_MAX // 2]
-        _CHAIN_MEMO.append((key, df, out, sc))
     return out

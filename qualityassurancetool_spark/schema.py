@@ -50,32 +50,6 @@ OBSERVATIONS_SCHEMA = T.StructType(
 )
 
 
-# Resolved-reader PLAN memo, keyed (applicationId, sf_dir, name).  A
-# DataFrame is an immutable logical plan — reusing the object skips the
-# per-call py4j/DataSource-resolution/schema-inference round trips
-# (measured 150-700 ms per load_table call; every declared query pays it
-# 1-3x per build), while every ACTION on it still scans the parquet
-# files, so no data or results are ever cached here.  The cache assumes
-# the source files under a given path are immutable for the lifetime of
-# the session — the same assumption Spark's own session-scoped
-# FileStatusCache already makes for repeated scans of one path.  Keyed
-# on applicationId so a fresh session never sees another session's
-# frames; the one-entry app slot drops everything when the app changes.
-_PLAN_CACHE: dict = {"app": None, "tables": {}}
-
-
-def _app_id(spark: SparkSession) -> str | None:
-    cached = getattr(spark, "_qat_app_id", None)
-    if cached is not None:
-        return cached
-    try:
-        app = spark.sparkContext.applicationId
-        spark._qat_app_id = app
-        return app
-    except Exception:
-        return None
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata parquet table.
 
@@ -89,11 +63,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the ns-precision parquet; ANSI off because the engine's dirty-data
     # contract is null-on-error (Spark 4 flipped the default to on, which
     # would fail a whole job on one bad cast/div) — same environment-drift
-    # class as the TIMESTAMP_NTZ round-1 incident.  This block runs on
-    # EVERY call, before the plan-memo lookup: the heal is a per-call
-    # contract (a session may flip ANSI at any time between calls —
-    # tests/test_session_drift.py pins it), and skipping it on a memo
-    # hit shipped exactly that regression in the first memo version.
+    # class as the TIMESTAMP_NTZ round-1 incident.  The heal is a
+    # per-call contract: a session may flip ANSI at any time between
+    # calls (tests/test_session_drift.py pins it).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     # the NTZ→TIMESTAMP self-heal below is value-exact ONLY under a UTC
@@ -110,15 +82,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "spark.sql.shuffle.partitions",
             _os.environ.get("SPARK_GRAFT_CPUS", "32"),
         )
-    app = _app_id(spark)
-    if app is not None:
-        if _PLAN_CACHE["app"] != app:
-            _PLAN_CACHE["app"] = app
-            _PLAN_CACHE["tables"] = {}
-        hit = _PLAN_CACHE["tables"].get((sf_dir, name))
-        if hit is not None:
-            return hit
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    # a frame persisted over this path by an earlier build (e.g.
+    # minhash_dedup's shingle frame) would otherwise be served to this
+    # build by Spark's plan-matching cache lookup, even after the file
+    # was replaced; refreshing drops its data so it is recomputed from
+    # the files as they are now
+    spark.catalog.refreshByPath(path)
+    df = spark.read.parquet(path)
     for f_ in df.schema.fields:
         if f_.name == "ts" and isinstance(f_.dataType, T.LongType):
             # integral `div`, not float `/`: ns epochs (~1.7e18) exceed
@@ -131,8 +102,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # on some sessions; unix_micros/withWatermark reject NTZ.  The
             # session timezone is UTC, so the cast is value-exact.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    if app is not None:
-        _PLAN_CACHE["tables"][(sf_dir, name)] = df
     return df
 
 
@@ -147,11 +116,6 @@ def events_as_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-modular arithmetic so Spark and any SQL oracle reproduce the
     exact same doubles (no libm involved).
     """
-    app = _app_id(spark)
-    if app is not None and _PLAN_CACHE["app"] == app:
-        hit = _PLAN_CACHE["tables"].get((sf_dir, "__obs__"))
-        if hit is not None:
-            return hit
     ev = load_table(spark, sf_dir, "events")
     obs = ev.select(
         F.col("event_id").alias(Obs.IOT_ID),
@@ -170,8 +134,6 @@ def events_as_observations(spark: SparkSession, sf_dir: str) -> DataFrame:
             Obs.LONG
         ),
     )
-    if app is not None:
-        _PLAN_CACHE["tables"][(sf_dir, "__obs__")] = obs
     return obs
 
 

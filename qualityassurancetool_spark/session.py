@@ -192,13 +192,8 @@ def get_spark(app_name: str = "qualityassurancetool-spark") -> SparkSession:
         # ns timestamp); schema.load_table converts to µs TimestampType
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("QAT_DRIVER_MEM", "8g"))
-        # UI off for throughput; SPARK_GRAFT_UI=1 re-enables it for the
-        # probes that read shuffle/spill metrics from the UI REST API
-        # (tools/dress_rehearsal.py)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # UI off for throughput
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Arrow batches crossing the Python boundary are additionally
         # byte-bounded (Spark 4 knob; guide §4.2): the 10 000-record

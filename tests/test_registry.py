@@ -547,11 +547,6 @@ def test_region_strategy_mask_matches_default(spark):
     the rasterized land mask (built once, memoized on the config) —
     flags identical to the default dispatch, and the memoized mask is
     reused across windows of a run."""
-    # the registered-check chain plan memo (round 12) would serve
-    # an earlier test's identical-valued chain and skip this
-    # builder's per-config side effects — isolate it
-    from qualityassurancetool_spark.plans.registry import _CHAIN_MEMO
-    _CHAIN_MEMO.clear()
     obs = events_as_observations(spark, SF_DIR)
     base = {
         "QC": FULL_CFG["QC"],
@@ -586,11 +581,6 @@ def test_region_mask_cache_invalidated_on_coordinate_change(spark):
     the same names across windows of a long-lived config, and a
     names-only check would serve stale conclusive cells silently
     (advisor finding, round 11)."""
-    # the registered-check chain plan memo (round 12) would serve
-    # an earlier test's identical-valued chain and skip this
-    # builder's per-config side effects — isolate it
-    from qualityassurancetool_spark.plans.registry import _CHAIN_MEMO
-    _CHAIN_MEMO.clear()
     obs = events_as_observations(spark, SF_DIR)
     base = {
         "QC": FULL_CFG["QC"],

@@ -1,6 +1,6 @@
 """Similarity-family edge cases pinned by the round-8 review: zero-norm
-vectors, non-long id types, empty query sets, and centroid-cache
-refresh on overwritten state."""
+vectors, non-long id types, empty query sets, centroid refresh on
+overwritten state, and one centroid collect per IVF build."""
 
 from __future__ import annotations
 
@@ -90,8 +90,8 @@ def test_exact_rerank_drops_zero_norm_candidates(spark, emb):
 
 def test_centroid_cache_refreshes_on_overwritten_path(spark, tmp_path):
     """An identical read plan over an OVERWRITTEN centroid parquet must
-    serve the NEW centroids (the semanticHash-only cache key served the
-    stale ones for the process lifetime)."""
+    serve the NEW centroids (a semanticHash-keyed centroid cache once
+    served the stale ones for the process lifetime)."""
     from qualityassurancetool_spark.operators.similarity import ivf_assign
 
     p = str(tmp_path / "cents")
@@ -112,3 +112,30 @@ def test_centroid_cache_refreshes_on_overwritten_path(spark, tmp_path):
     ).write.mode("overwrite").parquet(p)
     second = ivf_assign(vecs, spark.read.parquet(p)).collect()[0]
     assert second["cluster_id"] == 0
+
+
+def test_ivf_topk_build_runs_one_centroid_collect(spark, sf_dir):
+    """Each ivf_topk build runs exactly one Spark job, the centroid
+    collect, shared by its corpus and query assignment sites; a second
+    build of the same query collects again rather than reusing the
+    first build's centroids."""
+    import uuid
+
+    from qualityassurancetool_spark.operators.similarity import ivf_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    centroids = emb.where(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
+    )
+    queries = emb.where(F.col("vec_id") < 5)
+    sc = spark.sparkContext
+    jobs = []
+    for _ in range(2):
+        group = f"ivf-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "ivf_topk build")
+        try:
+            ivf_topk(emb, queries, centroids, k=5, nprobe=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs == [1, 1]

@@ -1,14 +1,15 @@
 """Per-query profiling for the optimization rounds: separates DRIVER
 plan-build time (DataFrame construction, py4j traffic, any collects the
-build path performs) from EXECUTION time (the ``count()`` action the
-bench times), and optionally dumps ``explain("formatted")`` per query.
+build path performs) from EXECUTION time (the noop-sink write the bench
+times, which computes every column of every row), and optionally dumps
+``explain("formatted")`` per query.
 
 Usage:
     python tools/profile_queries.py [--explain-dir DIR] [--iters N] [query ...]
 
-Writes one line per query:  name  build_s  exec_s  total_s  rows
-and a JSON blob at the end.  Uses the same session/table warm-up as
-bench.py so numbers are comparable to warm bench medians.
+Writes one line per query:  name  build_s  exec_s  total_s
+and a JSON blob at the end.  Uses the same session/table warm-up and the
+same action as bench.py, so total_s is comparable to warm bench medians.
 """
 
 from __future__ import annotations
@@ -51,27 +52,30 @@ def main() -> None:
 
     for t in ("region", "events", "documents", "embeddings", "lineitem"):
         load_table(spark, args.sf_dir, t).count()
+    def run_noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
+
     # untimed warm pass (JIT/codegen), same as bench.py
     for name in names:
-        qs[name](spark, args.sf_dir).count()
+        run_noop(qs[name](spark, args.sf_dir))
 
     out = {}
-    print(f"{'query':28} {'build_s':>8} {'exec_s':>8} {'total_s':>8} rows")
+    print(f"{'query':28} {'build_s':>8} {'exec_s':>8} {'total_s':>8}")
     for name in names:
-        builds, execs, rows = [], [], 0
+        builds, execs = [], []
         for _ in range(args.iters):
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf_dir)
             t1 = time.perf_counter()
-            rows = df.count()
+            run_noop(df)
             t2 = time.perf_counter()
             builds.append(t1 - t0)
             execs.append(t2 - t1)
         b = statistics.median(builds)
         e = statistics.median(execs)
         out[name] = {"build_s": round(b, 3), "exec_s": round(e, 3),
-                     "total_s": round(b + e, 3), "rows": rows}
-        print(f"{name:28} {b:8.3f} {e:8.3f} {b + e:8.3f} {rows}")
+                     "total_s": round(b + e, 3)}
+        print(f"{name:28} {b:8.3f} {e:8.3f} {b + e:8.3f}")
         if args.explain_dir:
             os.makedirs(args.explain_dir, exist_ok=True)
             df = qs[name](spark, args.sf_dir)
