@@ -1,4 +1,5 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs the ``kind == "bench"`` rows of
+``__spark_entry__.CATALOG`` at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -32,80 +33,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
-    "qc_full_pipeline",
-    "qc_reference_chain",
-    "qc_range_flags",
-    "qc_gradient",
-    "qc_zscore",
-    "qc_asof_dependent",
-    "qc_depth_flags",
-    "qc_spatial_outlier",
-    "qc_stabilization",
-    "pivot_export",
-    "shipping_priority",
-    "lang_quality_rollup",
-    "curation_pipeline",
-    "dedup_signatures",
-    "dedup_clusters",
-    "decontaminate_overlap",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "sim_topk",
-    "text_quality_filters",
-    "sample_stratified",
-    # round-5 promoted flagships (driver-gate rows since r5)
-    "bm25",
-    "cms",
-    "multipattern",
-    # round-5 second swap: hll/ddsketch replace the retired
-    # price_percentiles/events_profile rows (covered as x_* extras)
-    "hll_distinct",
-    "ddsketch_quantiles",
-    # round-5 third swap: funnel/cohort replace the retired
-    # qc_flag_histogram/unique_value_assert rows (covered as x_*)
-    "funnel",
-    "cohort",
-    # round-5 fourth swap: ml_eval/linreg replace the retired
-    # paged_scan/nearest_lookup rows (covered as x_*)
-    "ml_eval",
-    "linreg",
-    # round-6 swap: ewma/experiment/ann_ivfadc replace the retired
-    # text_stats/nested_flatten/frame_sample_plan rows and the brute
-    # ANN arm (all covered as x_*); ann_ivfadc is the 100 TB ANN shape
-    "ewma",
-    "experiment",
-    "ann_ivfadc",
-    # round-7 swap: cusum/seasonal/psi (the monitoring family) replace
-    # the retired unpivot_roundtrip/agg_pricing_summary/
-    # join_segment_revenue rows (all covered as x_*)
-    "cusum",
-    "seasonal",
-    "psi",
-    # round-8 swap: episodes (incident collapse, the monitoring story's
-    # operational half) replaces the retired rollup_revenue row
-    "episodes",
-    # round-9 swap: resample/heavy_hitters_by replace the retired
-    # windowed_flag_rollup/downsample_transfer rows (covered as x_*)
-    "resample",
-    "heavy_hitters_by",
-    # round-10 swap: simhash_pairs/isotonic replace the retired
-    # topk_orders_per_segment/qc_region_lookup rows (covered as x_*)
-    "simhash_pairs",
-    "isotonic",
-    # round-11 swap: maxsim/kcore replace the retired
-    # sessionize_events/dedup_ngram_jaccard rows (covered as x_*)
-    "maxsim",
-    "kcore",
-    # round-12 restoration (VERDICT r11 item 1): the round-11 build
-    # phase's retirement of these two dropped them from the declared
-    # gate; nothing caps the gate at 50, so they return ALONGSIDE
-    # maxsim/kcore (45 bench rows, 52 declared)
-    "sessionize_events",
-    "dedup_ngram_jaccard",
-]
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spec = importlib.util.spec_from_file_location(
@@ -119,8 +46,8 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = m.queries()
-    timings: dict[str, float] = {}
+    # the catalog's bench rows, in catalog order
+    bench = [(name, fn) for name, fn, _, kind in m.CATALOG if kind == "bench"]
     # warm the JVM, codegen, and parquet footer caches so the first timed
     # query isn't charged session startup costs
     from qualityassurancetool_spark.schema import load_table
@@ -146,9 +73,9 @@ def main() -> None:
 
     t_warm = time.perf_counter()
     cold: dict[str, float] = {}
-    for name in BENCH_QUERIES:
+    for name, fn in bench:
         t0 = time.perf_counter()
-        run_noop(qs[name](spark, sf_dir))
+        run_noop(fn(spark, sf_dir))
         cold[name] = round(time.perf_counter() - t0, 3)
     print(
         f"# warm-up pass: {time.perf_counter() - t_warm:.1f}s "
@@ -160,8 +87,7 @@ def main() -> None:
         tm: dict[str, float] = {}
         bm: dict[str, float] = {}
         tot = 0.0
-        for name in BENCH_QUERIES:
-            fn = qs[name]
+        for name, fn in bench:
             samples = []
             builds = []
             for _ in range(iters):
@@ -237,9 +163,9 @@ def main() -> None:
                 )
             t_w1 = time.perf_counter()
             cold1: dict[str, float] = {}
-            for name in BENCH_QUERIES:
+            for name, fn in bench:
                 t0 = time.perf_counter()
-                run_noop(qs[name](spark, sf1_dir))
+                run_noop(fn(spark, sf1_dir))
                 cold1[name] = round(time.perf_counter() - t0, 3)
             print(
                 f"# sf1 warm-up pass: "

@@ -36,7 +36,7 @@ Scale shape (the part that matters at 100 TB):
   asc) on the scored pairs — at most ``|matched docs| × |queries|``
   rows ever shuffle, text never does.
 
-Cross-engine: ``tools/extra_oracles.py::x_bm25`` replicates tokenize,
+Cross-engine: ``__spark_entry__.py`` query ``bm25`` replicates tokenize,
 df, idf and the saturation formula in DuckDB and must match to 6 dp.
 """
 

@@ -23,7 +23,7 @@ Spark shape, all declarative:
 - **query** — keys expand to their ``depth`` cells, broadcast-join the
   sketch, ``min`` per key; absent cells count 0.
 
-Cross-engine: ``tools/extra_oracles.py::x_cms`` replicates the hash
+Cross-engine: ``__spark_entry__.py`` query ``cms`` replicates the hash
 family, build and query in DuckDB — cell-exact, not just bound-exact.
 """
 

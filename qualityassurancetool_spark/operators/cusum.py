@@ -19,7 +19,7 @@ max-plus identity, same family as the maximum-subarray trick):
 so the whole chart is TWO stacked window expressions — a running sum,
 then a running min over it — per direction.  One shuffle on the group
 key, no UDF, no iteration, exactly replicable in any SQL engine
-(``tools/extra_oracles.py::x_cusum`` replays it in DuckDB and a pytest
+(``__spark_entry__.py`` query ``cusum`` replays it in DuckDB and a pytest
 pins it against the literal recurrence).
 
 ``target``/``sigma`` defaults are per-group scalars estimated from

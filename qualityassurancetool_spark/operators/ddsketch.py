@@ -28,7 +28,7 @@ most ``groups × buckets`` pre-aggregated cells (buckets ≈
 ``log_gamma(max/min)`` ≈ 1.4 k for a 1e-6..1e12 range at alpha=1 %);
 quantile queries are a cumulative-count window walk.
 
-Cross-engine: ``tools/extra_oracles.py::x_ddsketch`` replicates
+Cross-engine: ``__spark_entry__.py`` query ``ddsketch_quantiles`` replicates
 bucket mapping, build and the quantile walk in DuckDB — cell-exact
 counts, quantile values at 6 dp.  Streaming twin:
 ``streaming/ddsketch.py`` (scalar count state per bucket).

@@ -31,7 +31,7 @@ else (including NULL-as-its-own-category) folds into ``__other__`` so
 new unseen categories register as shift instead of crashing the
 alignment.
 
-Cross-engine: ``tools/extra_oracles.py::x_psi`` — DuckDB replica of
+Cross-engine: ``__spark_entry__.py`` query ``psi`` — DuckDB replica of
 cut-points, binning, smoothing, and both statistics.
 """
 

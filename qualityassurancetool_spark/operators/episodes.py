@@ -14,7 +14,7 @@ than the input), one window on the group key for the lag-gap episode
 boundaries + running episode ids, then an aggregate on
 (group, episode) — same key prefix, the sort is reused.  No UDF.
 
-Cross-engine: ``tools/extra_oracles.py::x_episodes`` — DuckDB
+Cross-engine: ``__spark_entry__.py`` query ``episodes`` — DuckDB
 islands replica over a synthetic threshold flag on the events stream.
 """
 

@@ -29,7 +29,7 @@ itself.  At low stream cardinality the same streams×buckets
 strategy as the other QC windows applies (`operators/
 partitioned_windows`); EWMA's state is a K-lag halo.
 
-Cross-engine: ``tools/extra_oracles.py::x_ewma`` — DuckDB replica
+Cross-engine: ``__spark_entry__.py`` query ``ewma`` — DuckDB replica
 with the same unrolled lags over the events stream.
 """
 

@@ -23,7 +23,7 @@ adjustment is a row-preserving Column against broadcast literals.
 Rows lacking the covariate keep their raw metric (θ·0 adjustment),
 preserving the experiment's row count.
 
-Cross-engine: ``tools/extra_oracles.py::x_experiment`` — DuckDB
+Cross-engine: ``__spark_entry__.py`` query ``experiment`` — DuckDB
 replica over a deterministic variant assignment on lineitem.
 """
 

@@ -416,7 +416,7 @@ def k_core(
     strategies are observationally identical (property-tested
     against each other).
 
-    Cross-engine: ``tools/extra_oracles.py::x_kcore`` — DuckDB
+    Cross-engine: ``__spark_entry__.py`` query ``kcore`` — DuckDB
     fixed-depth unrolled-peel replica over a cascade graph built to
     converge within the unroll budget (the Spark side iterates to
     the true fixpoint; the test asserts the budget was enough).

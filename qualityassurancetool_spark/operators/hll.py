@@ -34,7 +34,7 @@ Spark shape, all declarative (no UDF):
   correction is dropped: with a 48-bit rank word it only matters past
   ~10^13 distinct keys per group.
 
-Cross-engine: ``tools/extra_oracles.py::x_hll`` replicates hash,
+Cross-engine: ``__spark_entry__.py`` query ``hll_distinct`` replicates hash,
 registers and the estimate in DuckDB — register-exact, estimate
 compared at 4 dp (one ``ln`` call is the only libm dependence).
 Streaming twin: ``streaming/hll.py`` (fixed register-vector state).

@@ -17,7 +17,7 @@ broadcast, and the score itself is a pure nested higher-order-function
 Column (``aggregate`` over query tokens of ``array_max`` over
 ``transform`` of document tokens) — no UDF, whole-stage codegen
 throughout.  Products are widened to double BEFORE multiplying so the
-arithmetic is engine-portable (see ``x_maxsim``).
+arithmetic is engine-portable (see the ``maxsim`` query).
 
 ``split_tokens`` adapts single-vector corpora (our ``embeddings``
 table) into fixed-count token matrices by slicing — the real use

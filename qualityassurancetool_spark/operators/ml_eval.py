@@ -29,7 +29,7 @@ to a fixed grid), bounding the shuffled state at ``bins`` rows per
 group for a ≤ 1/bins rank perturbation — the DDSketch trade, made
 explicit.
 
-Cross-engine: ``tools/extra_oracles.py::x_ml_eval`` replays the
+Cross-engine: ``__spark_entry__.py`` query ``ml_eval`` replays the
 distinct-score cumulative construction in DuckDB SQL (heavy-tie
 scores) and matches AUC/log-loss/Brier to 6 dp plus the full
 threshold table.

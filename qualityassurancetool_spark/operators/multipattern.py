@@ -19,7 +19,7 @@ shuffle, only (id, counts) come back.  Text is normalized with the
 corpus-standard ``normalize_text`` so counts line up with every other
 text operator.
 
-Cross-engine: ``tools/extra_oracles.py::x_multipattern`` replicates
+Cross-engine: ``__spark_entry__.py`` query ``multipattern`` replicates
 the overlapping-occurrence counts in DuckDB with a position scan.
 """
 
@@ -152,7 +152,7 @@ def match_counts(
             # one leading/trailing space so boundary-anchor patterns
             # ("fast ", " fast") also match a word at document start/end
             # — same padding badword_hit uses (advisor finding; the
-            # DuckDB oracle x_multipattern pads identically)
+            # multipattern query's DuckDB oracle pads identically)
             texts = pdf[text_col].map(lambda t: " " + _normalize(t) + " ")
             res = texts.map(lambda t: _scan(auto, t))
             out = pdf[[id_col]].copy()

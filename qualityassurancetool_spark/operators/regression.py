@@ -31,9 +31,10 @@ are non-null (pairwise deletion, matching SQL's ``regr_*``/``corr``
 aggregates, which the cross-engine oracle uses directly).
 
 Cross-engine: ``tools/extra_oracles.py::x_ols`` — DuckDB
-``regr_slope/regr_intercept/regr_r2/corr`` replica — and
-``::x_linreg`` — the d=2 normal equations solved by Cramer's rule in
-SQL, coefficients matching to 6 dp.
+``regr_slope/regr_intercept/regr_r2/corr`` replica — and the
+``linreg`` query in ``__spark_entry__.py`` — the d=2 normal
+equations solved by Cramer's rule in SQL, coefficients matching to
+6 dp.
 """
 
 from __future__ import annotations

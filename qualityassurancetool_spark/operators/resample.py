@@ -31,7 +31,7 @@ running frames).  Scale: the window partitions by stream — the same
 low-cardinality consideration as the QC chain (``window_strategy``
 discussion in docs/SCALE.md) applies when streams ≪ cores.
 
-Cross-engine: ``tools/extra_oracles.py::x_resample`` replicates grid
+Cross-engine: ``__spark_entry__.py`` query ``resample`` replicates grid
 generation, neighbor windows and the interpolation arithmetic in
 DuckDB (values at 6 dp).
 """

@@ -26,7 +26,7 @@ fewer than ``min_samples`` values → NULL flag (no baseline).  The
 flag test carries the same scale-relative epsilon as the EWMA chart
 (FP residue of an averaged constant cell must not flag).
 
-Cross-engine: ``tools/extra_oracles.py::x_seasonal`` — DuckDB replica
+Cross-engine: ``__spark_entry__.py`` query ``seasonal`` — DuckDB replica
 of profile + scoring over the events stream.
 """
 

@@ -1,5 +1,5 @@
 """Okapi BM25 ranked retrieval (operators/bm25).
-Cross-engine parity: tools/extra_oracles.py::x_bm25."""
+Cross-engine parity: the ``bm25`` query in __spark_entry__.py."""
 
 import math
 

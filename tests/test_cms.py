@@ -1,5 +1,5 @@
 """Count-Min sketch (operators/cms).
-Cross-engine parity: tools/extra_oracles.py::x_cms."""
+Cross-engine parity: the ``cms`` query in __spark_entry__.py."""
 
 import pytest
 from pyspark.sql import functions as F

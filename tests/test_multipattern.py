@@ -1,5 +1,5 @@
 """Aho-Corasick multi-pattern matching (operators/multipattern).
-Cross-engine parity: tools/extra_oracles.py::x_multipattern."""
+Cross-engine parity: the ``multipattern`` query in __spark_entry__.py."""
 
 import re
 

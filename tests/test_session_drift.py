@@ -6,6 +6,8 @@ with ANSI forced on."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -32,7 +34,11 @@ def test_flag_algebra_under_ansi_drift(ansi_session, sf_dir):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entrymod_drift", "/root/repo/__spark_entry__.py"
+        "entrymod_drift",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "__spark_entry__.py",
+        ),
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -1,22 +1,28 @@
-"""Dev harness mimicking the driver's correctness gate: run every
-``queries()`` entry against its ``oracle_sql()`` in DuckDB at a given sf
-and compare row count, column names, and order-insensitive values.
-After the declared queries it runs ``tools/extra_oracles.py`` — the
-cross-engine checks for scale operators the 50-query cap keeps
-undeclared — so one command covers every oracle.
+"""Dev harness mimicking the driver's correctness gate.  It runs every
+row of ``__spark_entry__.CATALOG`` (the declared queries, then the
+retired ones) against its DuckDB oracle at a given sf and compares
+column names, canonical column types, row count and order-insensitive
+values.  After the catalog it runs ``tools/extra_oracles.py``: the
+cross-engine checks for operators no catalog row builds, compared on
+column names and values.  One command covers every oracle.
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
-(a name filter selects among declared AND extra checks; extras are
-named ``x_*``)
+Usage: python tools/check_oracles.py [sf_dir] [name ...]
+       python tools/check_oracles.py --list
+(a name filter selects among catalog rows AND extras; extras are named
+``x_*``)
 """
 
 from __future__ import annotations
 
+import functools
 import importlib.util
 import math
+import os
 import sys
 
 import duckdb
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -24,10 +30,11 @@ TABLES = [
 ]
 
 
+@functools.cache
 def load_entry():
-    sys.path.insert(0, "/root/repo")
+    """This checkout's ``__spark_entry__.py``, loaded once per process."""
     spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
+        "entrymod", os.path.join(ROOT, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -105,22 +112,54 @@ def canon_duck_type(dt: str) -> str:
     return dt.lower()
 
 
-def main() -> int:
-    if "--list" in sys.argv:
-        # print every check name (declared then extras), one per line —
-        # for building chunked runs that stay under an outer timeout
-        m = load_entry()
-        sys.path.insert(0, "/root/repo/tools")
-        from extra_oracles import EXTRA_CHECKS
+def report(name, s_cols, s_rows, d_cols, d_rows, types=None) -> bool:
+    """Print one OK/FAIL line for a check and return whether it passed.
+    Column names are compared when given, canonical types when
+    ``types=(spark_types, duck_types)`` is given (catalog rows only:
+    extras are not driver-hashed), then row count and value multiset."""
+    problems = []
+    if s_cols is not None and (
+        [c.lower() for c in s_cols] != [c.lower() for c in d_cols]
+    ):
+        problems.append(f"cols spark={s_cols} duck={d_cols}")
+    elif types:
+        problems += [
+            f"type[{c}] spark={st} duck={dk}"
+            for c, st, dk in zip(s_cols, *types)
+            if st != dk
+        ]
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duck={len(d_rows)}")
+    if not problems:
+        s_ms = frame_to_multiset(s_cols, s_rows)
+        d_ms = frame_to_multiset(d_cols, d_rows)
+        if s_ms != d_ms:
+            i = next(i for i, (a, b) in enumerate(zip(s_ms, d_ms)) if a != b)
+            problems.append(
+                f"value multiset mismatch first-diff@{i}: "
+                f"spark={s_ms[i]} duck={d_ms[i]}"
+            )
+    if problems:
+        print(f"FAIL  {name}: " + "; ".join(problems))
+    else:
+        print(f"OK    {name}: rows={len(s_rows)}")
+    return not problems
 
-        for name in list(m.queries()) + list(EXTRA_CHECKS):
+
+def main() -> int:
+    from extra_oracles import EXTRA_CHECKS
+
+    m = load_entry()
+    if "--list" in sys.argv:
+        # every check name (catalog rows, then extras), one per line, for
+        # building chunked runs that stay under an outer timeout
+        for name in [row[0] for row in m.CATALOG] + list(EXTRA_CHECKS):
             print(name)
         return 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    m = load_entry()
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from qualityassurancetool_spark.session import get_spark
 
     spark = get_spark("oracle-check")
@@ -132,118 +171,49 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs, oracles = m.queries(), m.oracle_sql()
     failures = 0
-    for name, fn in qs.items():
+    for name, fn, sql, _ in m.CATALOG:
         if only and name not in only:
             continue
         try:
             sdf = fn(spark, sf_dir)
-            spark_cols = sdf.columns
-            spark_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {type(e).__name__} {str(e)[:300]}")
+            s_rows = [tuple(r) for r in sdf.collect()]
+            res = con.execute(sql)
+            d_cols = [d[0] for d in res.description]
+            d_rows = res.fetchall()
+            d_types = con.execute(
+                f"DESCRIBE (SELECT * FROM ({sql}) _q)"
+            ).fetchall()
+        except Exception as e:  # noqa: BLE001 - harness boundary
+            print(f"FAIL  {name}: {type(e).__name__} {str(e)[:300]}")
             failures += 1
             continue
-        if name not in oracles:
-            print(f"OK?   {name}: rows={len(spark_rows)} (no oracle, rows-only)")
-            continue
-        try:
-            res = con.execute(oracles[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-            duck_types = [
-                r[1]
-                for r in con.execute(
-                    f"DESCRIBE (SELECT * FROM ({oracles[name]}) _q)"
-                ).fetchall()
-            ]
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__} {str(e)[:300]}")
-            failures += 1
-            continue
-        problems = []
-        if [c.lower() for c in spark_cols] != [c.lower() for c in duck_cols]:
-            problems.append(f"cols spark={spark_cols} duck={duck_cols}")
-        else:
-            s_types = [canon_spark_type(t) for _, t in sdf.dtypes]
-            d_types = [canon_duck_type(t) for t in duck_types]
-            for c, st, dk in zip(spark_cols, s_types, d_types):
-                if st != dk:
-                    problems.append(f"type[{c}] spark={st} duck={dk}")
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if not problems:
-            s_ms = frame_to_multiset(spark_cols, spark_rows)
-            d_ms = frame_to_multiset(duck_cols, duck_rows)
-            if s_ms != d_ms:
-                diff_i = next(
-                    (i for i, (a, b) in enumerate(zip(s_ms, d_ms)) if a != b),
-                    None,
-                )
-                detail = (
-                    f" first-diff@{diff_i}: spark={s_ms[diff_i]} duck={d_ms[diff_i]}"
-                    if diff_i is not None
-                    else ""
-                )
-                problems.append("value multiset mismatch" + detail)
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            failures += 1
-        else:
-            print(f"OK    {name}: rows={len(spark_rows)}")
+        types = (
+            [canon_spark_type(t) for _, t in sdf.dtypes],
+            [canon_duck_type(r[1]) for r in d_types],
+        )
+        failures += not report(name, sdf.columns, s_rows, d_cols, d_rows, types)
 
-    failures += run_extras(spark, con, sf_dir, only)
-    spark.stop()
-    return 1 if failures else 0
-
-
-def run_extras(spark, con, sf_dir: str, only: set) -> int:
-    """Undeclared-operator oracles (tools/extra_oracles.py).  Value
-    comparison only (multiset + row count): extras are not driver-hashed,
-    so column-type canonicalization is not load-bearing here."""
-    sys.path.insert(0, "/root/repo/tools")
-    from extra_oracles import EXTRA_CHECKS
-
-    failures = 0
     for name, check in EXTRA_CHECKS.items():
         if only and name not in only:
             continue
         try:
             left, right = check(spark, con, sf_dir)
             if hasattr(left, "collect"):  # (spark_df, duck_sql) shape
-                cols = left.columns
                 s_rows = [tuple(r) for r in left.collect()]
                 res = con.execute(right)
-                d_cols = [d[0] for d in res.description]
-                d_rows = res.fetchall()
-                if [c.lower() for c in cols] != [c.lower() for c in d_cols]:
-                    print(f"FAIL  {name}: cols spark={cols} duck={d_cols}")
-                    failures += 1
-                    continue
+                ok = report(
+                    name, left.columns, s_rows,
+                    [d[0] for d in res.description], res.fetchall(),
+                )
             else:  # already-materialized (rows, rows) shape
-                s_rows, d_rows = left, right
-            s_ms = frame_to_multiset(None, s_rows)
-            d_ms = frame_to_multiset(None, d_rows)
-            if len(s_rows) != len(d_rows) or s_ms != d_ms:
-                diff_i = next(
-                    (i for i, (a, b) in enumerate(zip(s_ms, d_ms)) if a != b),
-                    None,
-                )
-                detail = (
-                    f" first-diff@{diff_i}: spark={s_ms[diff_i]}"
-                    f" duck={d_ms[diff_i]}"
-                    if diff_i is not None
-                    else f" rowcount {len(s_rows)} vs {len(d_rows)}"
-                )
-                print(f"FAIL  {name}: value multiset mismatch{detail}")
-                failures += 1
-            else:
-                print(f"OK    {name}: rows={len(s_rows)}")
+                ok = report(name, None, left, None, right)
         except Exception as e:  # noqa: BLE001 - harness boundary
             print(f"FAIL  {name}: {type(e).__name__} {str(e)[:300]}")
-            failures += 1
-    return failures
+            ok = False
+        failures += not ok
+    spark.stop()
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -1,13 +1,14 @@
-"""Cross-engine oracles for the scale operators the 50-query driver cap
-leaves undeclared (VERDICT r2: chunking/packing, int8 quantization,
-leakage-safe group split, streaming exact dedup, corpus shard layout,
-intra-doc paragraph dedup).  Run through ``tools/check_oracles.py``
-(after the declared queries) so ONE command regression-checks every
-oracle, declared or not.
+"""Cross-engine oracles for operators and variants that no
+``__spark_entry__.CATALOG`` row builds (VERDICT r2: chunking/packing,
+int8 quantization, leakage-safe group split, streaming exact dedup,
+corpus shard layout, intra-doc paragraph dedup, and every operator
+added since).  Run through ``tools/check_oracles.py`` (after the
+catalog rows) so ONE command regression-checks every oracle.
 
 Each check runs the Spark operator and an independent DuckDB (or
 Spark-batch) re-implementation on the same testdata and compares the
-full value multiset — same comparison the declared-query gate uses.
+full value multiset — same comparison the catalog rows use, minus the
+column-type check.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+from check_oracles import load_entry
 from pyspark.sql import functions as F
 
 CHUNK, OVERLAP = 64, 16
@@ -393,7 +395,6 @@ def x_mixing(spark, con, sf_dir):
         ]
     )
     return sdf, sql
-
 
 
 def x_temperature_mix(spark, con, sf_dir):
@@ -995,7 +996,7 @@ def _resample_method_check(method: str, value_sql: str):
         )
         from qualityassurancetool_spark.schema import load_table
 
-        m = _entry_mod()
+        m = load_entry()
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderpriority").alias("sid"),
             F.col("o_orderdate").cast("timestamp").alias("ts"),
@@ -1145,7 +1146,7 @@ def x_simhash_pairs_full(spark, con, sf_dir):
     sdf = simhash_near_dup_pairs(
         docs, bits=32, bands=4, max_hamming=3
     ).orderBy("id_a", "id_b")
-    return sdf, _entry_mod()._sql_simhash_pairs(sliced=False)
+    return sdf, load_entry()._sql_simhash_pairs(sliced=False)
 
 
 def _region_test_polygon():
@@ -3262,14 +3263,13 @@ FROM events e JOIN q USING (event_type)
     return sdf, sql
 
 
-
 def x_rrf(spark, con, sf_dir):
     """Hybrid retrieval fusion (operators/fusion.rrf_fuse): REAL sparse
     (bm25_topk) + dense (brute_force_topk cosine) shortlists over the
     aligned documents/embeddings tables, fused with RRF c=60 — vs a
     DuckDB replica of the rank derivation + reciprocal-rank sum over
-    the SAME shortlists (both ends are independently oracled by x_bm25
-    and sim_topk; this pins the fusion arithmetic cross-engine)."""
+    the SAME shortlists (both ends are independently oracled by the bm25
+    and sim_topk rows; this pins the fusion arithmetic cross-engine)."""
     from qualityassurancetool_spark.functions.hashing import tokens
     from qualityassurancetool_spark.operators.bm25 import bm25_topk
     from qualityassurancetool_spark.operators.fusion import rrf_fuse
@@ -3347,7 +3347,6 @@ FROM (
 WHERE rn <= 10
 """
     return sdf, sql
-
 
 
 def x_gopher(spark, con, sf_dir):
@@ -3766,43 +3765,6 @@ FROM agg
     return sdf, sql
 
 
-def _entry_mod():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entrymod_x", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
-
-def _retired(name):
-    """Round-4 flagship swap (VERDICT r3 item 5) retired four trivial
-    declared queries from the 50-row driver gate; they stay covered
-    here with the same driver-grade comparison."""
-
-    def check(spark, con, sf_dir):
-        m = _entry_mod()
-        fn = getattr(m, f"q_{name}")
-        sql = getattr(m, f"SQL_{name.upper()}")
-        return fn(spark, sf_dir), sql
-
-    check.__name__ = f"x_{name}"
-    check.__doc__ = _retired.__doc__
-    return check
-
-
-x_filtered_revenue = _retired("filtered_revenue")
-# round-5 second swap: hll_distinct/ddsketch_quantiles promoted into the
-# driver gate; the two retired trivial rows stay covered here
-x_hll = _retired("hll_distinct")
-x_ddsketch = _retired("ddsketch_quantiles")
-x_events_profile = _retired("events_profile")
-x_price_percentiles = _retired("price_percentiles")
-# round-5 swap (VERDICT r4 item 2): three more trivial rows retired in
-# favor of the round-4 flagships bm25/cms/multipattern
-x_window_union_overlap = _retired("window_union_overlap")
 def x_feature_prep(spark, con, sf_dir):
     """target_encode (smoothed + leave-one-out, category-key windows)
     and chi_squared (one-pass exploded contingency with absent-cell
@@ -4220,16 +4182,6 @@ FROM pairs
     return sdf, sql
 
 
-# round-11 gate swap: kcore (iterated Matula-Beck peel) promoted into
-# the driver gate; retired rows keep driver-grade coverage here
-# (maxsim promoted too — its delegation lives here, below the
-# _retired helper definition)
-x_maxsim = _retired("maxsim")
-x_kcore = _retired("kcore")
-x_sessionize_events = _retired("sessionize_events")
-x_dedup_ngram_jaccard = _retired("dedup_ngram_jaccard")
-
-
 def x_quantile_bin(spark, con, sf_dir):
     """quantile_bin (exact type-7 cut-points rounded to 6 dp, HOF
     strictly-below bin fold) vs DuckDB quantile_cont with the same
@@ -4313,43 +4265,6 @@ SELECT * FROM hist UNION ALL SELECT * FROM cutrows
     return sdf, sql
 
 
-# round-5 third swap: funnel/cohort promoted into the driver gate,
-# retiring the 2-row flag histogram and the unique-value assertion
-# (both stay covered here and inside the qc chains / pytest)
-# round-10 swap (VERDICT r9 item 2): simhash_pairs + isotonic promoted
-# into the driver gate; the two thin retired rows stay covered here
-x_qc_region_lookup = _retired("qc_region_lookup")
-x_topk_orders_per_segment = _retired("topk_orders_per_segment")
-x_qc_flag_histogram = _retired("qc_flag_histogram")
-x_unique_value_assert = _retired("unique_value_assert")
-x_funnel = _retired("funnel")
-x_cohort = _retired("cohort")
-# round-5 fourth swap: ml_eval/linreg promoted into the driver gate,
-# retiring the paged scan and the nearest-value lookup (pushdown and
-# argmin semantics stay covered inside other declared chains and here)
-x_paged_scan = _retired("paged_scan")
-x_nearest_lookup = _retired("nearest_lookup")
-x_ml_eval = _retired("ml_eval")
-x_linreg = _retired("linreg")
-# round-6 swap: ewma/experiment/ann_ivfadc promoted into the driver
-# gate (ewma + experiment moved here->entry verbatim; ann_ivfadc is the
-# 100 TB ANN pipeline the brute baseline anchored), retiring three
-# trivial rows and the deliberately-linear brute arm
-x_ewma = _retired("ewma")
-x_experiment = _retired("experiment")
-x_ann_ivfadc_gate = _retired("ann_ivfadc")
-x_text_stats = _retired("text_stats")
-x_nested_flatten = _retired("nested_flatten")
-x_frame_sample_plan = _retired("frame_sample_plan")
-x_sim_brute = _retired("sim_brute")
-# round-7 swap: the monitoring family (cusum/seasonal/psi) promoted
-# into the driver gate (moved here->entry verbatim), retiring three
-# trivial rows; all six names stay as the same delegation
-x_cusum = _retired("cusum")
-x_seasonal = _retired("seasonal")
-x_psi = _retired("psi")
-# round-8 swap: episodes (incident collapse) promoted into the
-# driver gate (moved here->entry verbatim), retiring rollup_revenue
 def x_minhash_batched(spark, con, sf_dir):
     """minhash_dedup_batched (the band-batched bounded-state schedule,
     operators/dedup.py) must reproduce the declared dedup_minhash_lsh
@@ -4364,7 +4279,7 @@ def x_minhash_batched(spark, con, sf_dir):
     )
     from qualityassurancetool_spark.schema import load_table
 
-    m = _entry_mod()
+    m = load_entry()
     docs = load_table(spark, sf_dir, "documents")
     out = minhash_dedup_batched(
         docs,
@@ -4393,7 +4308,7 @@ def x_minhash_admit(spark, con, sf_dir):
     )
     from qualityassurancetool_spark.schema import load_table
 
-    m = _entry_mod()
+    m = load_entry()
     docs = load_table(spark, sf_dir, "documents")
     kw = dict(
         num_hashes=16, bands=8, shingle_k=3, threshold=0.5,
@@ -4429,7 +4344,7 @@ def x_minhash_admit_slim(spark, con, sf_dir):
     )
     from qualityassurancetool_spark.schema import load_table
 
-    m = _entry_mod()
+    m = load_entry()
     docs = load_table(spark, sf_dir, "documents")
     kw = dict(
         num_hashes=16, bands=8, shingle_k=3, threshold=0.5,
@@ -4455,32 +4370,6 @@ def x_minhash_admit_slim(spark, con, sf_dir):
         "WHERE id_a % 7 = 0 OR id_b % 7 = 0 ORDER BY id_a, id_b"
     )
     return sdf, sql
-
-
-x_episodes = _retired("episodes")
-x_rollup_revenue = _retired("rollup_revenue")
-# round-9 gate swap: resample/heavy_hitters_by PROMOTED into the driver
-# gate (their full implementations now live in __spark_entry__.py); the
-# two thinnest declared rows retired here with the same comparison
-x_resample = _retired("resample")
-x_heavy_hitters_by = _retired("heavy_hitters_by")
-x_windowed_flag_rollup = _retired("windowed_flag_rollup")
-x_downsample_transfer = _retired("downsample_transfer")
-x_unpivot_roundtrip = _retired("unpivot_roundtrip")
-x_agg_pricing_summary = _retired("agg_pricing_summary")
-x_join_segment_revenue = _retired("join_segment_revenue")
-
-# inverse of retirement: bm25/cms/multipattern were PROMOTED into the
-# driver gate this round; their x_* names stay as the same delegation
-# so historical harness invocations keep working without code drift
-x_bm25 = _retired("bm25")
-x_cms = _retired("cms")
-x_multipattern = _retired("multipattern")
-x_distinct_streams = _retired("distinct_streams")
-x_time_window_scan = _retired("time_window_scan")
-x_embedding_stats = _retired("embedding_stats")
-x_nation_region_rollup = _retired("nation_region_rollup")
-x_customers_without_orders = _retired("customers_without_orders")
 
 
 # name → check.  Two shapes: (spark_df, duck_sql) for plan-vs-SQL checks,
@@ -4530,9 +4419,6 @@ EXTRA_CHECKS = {
     "x_opq": x_opq,
     "x_ivfadc": x_ivfadc,
     "x_heavy_hitters": x_heavy_hitters,
-    "x_heavy_hitters_by": x_heavy_hitters_by,
-    "x_windowed_flag_rollup": x_windowed_flag_rollup,
-    "x_downsample_transfer": x_downsample_transfer,
     "x_interval_join": x_interval_join,
     "x_zorder": x_zorder,
     "x_pagerank": x_pagerank,
@@ -4548,40 +4434,17 @@ EXTRA_CHECKS = {
     "x_histogram": x_histogram,
     "x_l2_normalize": x_l2_normalize,
     "x_time_split": x_time_split,
-    "x_bm25": x_bm25,
     "x_rrf": x_rrf,
     "x_gopher": x_gopher,
-    "x_cms": x_cms,
-    "x_multipattern": x_multipattern,
     "x_badwords": x_badwords,
     "x_winsorize": x_winsorize,
-    "x_filtered_revenue": x_filtered_revenue,
-    "x_window_union_overlap": x_window_union_overlap,
-    "x_distinct_streams": x_distinct_streams,
-    "x_time_window_scan": x_time_window_scan,
-    "x_embedding_stats": x_embedding_stats,
-    "x_nation_region_rollup": x_nation_region_rollup,
-    "x_customers_without_orders": x_customers_without_orders,
-    "x_events_profile": x_events_profile,
-    "x_price_percentiles": x_price_percentiles,
-    "x_hll": x_hll,
     "x_kmv": x_kmv,
     "x_unimax": x_unimax,
-    "x_resample": x_resample,
     "x_triangles": x_triangles,
     "x_table_profile": x_table_profile,
-    "x_maxsim": x_maxsim,
-    "x_ddsketch": x_ddsketch,
     "x_kmv_compare": x_kmv_compare,
-    "x_funnel": x_funnel,
-    "x_cohort": x_cohort,
     "x_simhash_pairs_full": x_simhash_pairs_full,
     "x_region_mask": x_region_mask,
-    "x_qc_region_lookup": x_qc_region_lookup,
-    "x_topk_orders_per_segment": x_topk_orders_per_segment,
-    "x_kcore": x_kcore,
-    "x_sessionize_events": x_sessionize_events,
-    "x_dedup_ngram_jaccard": x_dedup_ngram_jaccard,
     "x_cooccurrence": x_cooccurrence,
     "x_transitions": x_transitions,
     "x_feature_prep": x_feature_prep,
@@ -4589,29 +4452,8 @@ EXTRA_CHECKS = {
     "x_ols": x_ols,
     "x_growth": x_growth,
     "x_rfm": x_rfm,
-    "x_qc_flag_histogram": x_qc_flag_histogram,
-    "x_unique_value_assert": x_unique_value_assert,
-    "x_ml_eval": x_ml_eval,
-    "x_linreg": x_linreg,
-    "x_paged_scan": x_paged_scan,
-    "x_nearest_lookup": x_nearest_lookup,
     "x_quantile_bin": x_quantile_bin,
-    "x_ewma": x_ewma,
-    "x_cusum": x_cusum,
-    "x_unpivot_roundtrip": x_unpivot_roundtrip,
-    "x_agg_pricing_summary": x_agg_pricing_summary,
-    "x_join_segment_revenue": x_join_segment_revenue,
-    "x_seasonal": x_seasonal,
-    "x_episodes": x_episodes,
-    "x_rollup_revenue": x_rollup_revenue,
     "x_minhash_batched": x_minhash_batched,
     "x_minhash_admit": x_minhash_admit,
     "x_minhash_admit_slim": x_minhash_admit_slim,
-    "x_psi": x_psi,
-    "x_experiment": x_experiment,
-    "x_ann_ivfadc_gate": x_ann_ivfadc_gate,
-    "x_text_stats": x_text_stats,
-    "x_nested_flatten": x_nested_flatten,
-    "x_frame_sample_plan": x_frame_sample_plan,
-    "x_sim_brute": x_sim_brute,
 }

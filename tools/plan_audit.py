@@ -15,20 +15,12 @@ Exit code 1 if any violation; prints one line per query.
 
 from __future__ import annotations
 
-import importlib.util
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+from check_oracles import ROOT, load_entry
 
-
-def load_entry():
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
+sys.path.insert(0, ROOT)
 
 
 # queries where a nested-loop join is the intended physical shape (tiny

@@ -7,6 +7,9 @@ times, which computes every column of every row), and optionally dumps
 Usage:
     python tools/profile_queries.py [--explain-dir DIR] [--iters N] [query ...]
 
+With no query names it profiles the catalog's bench rows; any catalog
+row, retired ones included, can be named.
+
 Writes one line per query:  name  build_s  exec_s  total_s
 and a JSON blob at the end.  Uses the same session/table warm-up and the
 same action as bench.py, so total_s is comparable to warm bench medians.
@@ -15,14 +18,15 @@ same action as bench.py, so total_s is comparable to warm bench medians.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from check_oracles import ROOT, load_entry
+
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -35,20 +39,16 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "entrymod", os.path.join(repo, "__spark_entry__.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    m = load_entry()
 
-    import bench as benchmod  # noqa: F401  (for BENCH_QUERIES)
     from qualityassurancetool_spark.session import get_spark
     from qualityassurancetool_spark.schema import load_table
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = m.queries()
-    names = args.queries or list(benchmod.BENCH_QUERIES)
+    qs = {name: fn for name, fn, _, _ in m.CATALOG}
+    names = args.queries or [
+        name for name, _, _, kind in m.CATALOG if kind == "bench"]
 
     for t in ("region", "events", "documents", "embeddings", "lineitem"):
         load_table(spark, args.sf_dir, t).count()
